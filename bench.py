@@ -70,7 +70,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from declarativeml_spark.queries import QUERIES
-    from declarativeml_spark.session import get_spark
+    from declarativeml_spark.session import default_cpus, get_spark
 
     spark = get_spark("declarativeml-bench")
 
@@ -456,7 +456,7 @@ def main() -> int:
     # driver benches at two core counts back to back, and the second
     # invocation overwriting BENCH_LOCAL.json destroyed the first
     # run's per-query map. BENCH_LOCAL_c{cpus}.json preserves both.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     with open(os.path.join(here, f"BENCH_LOCAL_c{cpus}.json"), "w") as f:
         json.dump(full, f, indent=1)
     # Full per-query map FIRST, short summary line LAST: the driver

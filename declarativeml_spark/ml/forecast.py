@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from declarativeml_spark.dsl.ir import ForecastModel
 from declarativeml_spark.ml.registry import get_algorithm
+from declarativeml_spark.operators.caching import collect_bounded
 from declarativeml_spark.plans.builder import resolve_source
 
 _FORECAST_ALIASES = {"prophet": "gradient_boosting_regressor"}
@@ -157,14 +158,13 @@ def _holiday_dates(spark: SparkSession, table: str) -> List[str]:
         raise ValueError(
             f"holidays table {table!r} has no date-typed column"
         )
-    rows = (
+    rows = collect_bounded(
         df.select(F.to_date(F.col(date_col)).cast("string").alias("d"))
         .where(F.col("d").isNotNull())
-        .distinct()
-        .limit(_MAX_HOLIDAY_ROWS + 1)
-        .collect()
+        .distinct(),
+        _MAX_HOLIDAY_ROWS,
     )
-    if len(rows) > _MAX_HOLIDAY_ROWS:
+    if rows is None:
         raise ValueError(
             f"holidays table {table!r} exceeds {_MAX_HOLIDAY_ROWS} distinct "
             "dates — not a calendar"

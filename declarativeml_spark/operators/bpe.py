@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from declarativeml_spark.operators.caching import (
+    collect_bounded,
     release_checkpoint,
     track_persist,
 )
@@ -332,11 +333,10 @@ def _bpe_learn(
         )
     )
     if max_types > 0:
-        # ONE job: the grouped agg + CollectLimit. If the vocabulary
-        # fits the cap we already hold ALL of it; if the limit
-        # truncated (cap exceeded), discard and fall back.
-        head = vocab.limit(max_types + 1).collect()
-        if len(head) <= max_types:
+        # the grouped agg + CollectLimit: a vocabulary that fits the
+        # cap arrives whole; above it, fall back
+        head = collect_bounded(vocab, max_types)
+        if head is not None:
             return _bpe_learn_local(
                 [(r["word"], r["cnt"]) for r in head],
                 n_merges,

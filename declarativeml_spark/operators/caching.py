@@ -20,17 +20,31 @@ plain ``persist()`` — query-path behavior is unchanged.
 Unpersist-after-return is always semantically safe in Spark: a cached
 plan that lost its cache recomputes from source. The lifecycle here is
 purely a memory-footprint contract.
+
+The module also holds the two halves of size-aware execution. An
+operator whose plane a dimension bounds (a nation graph, one row per
+document, a near-dup pair list) pulls it to the driver with
+:func:`collect_bounded`, which returns ``None`` above
+``LOCAL_MAX_ROWS`` so the caller keeps its distributed path. The
+driver-built result goes back to Spark through :func:`local_frame`,
+an Arrow transfer that runs no Spark job.
 """
 
 from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
-from typing import Iterator, List
+from typing import Iterator, List, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 _local = threading.local()
+
+# Planes up to this many rows run on the driver. Each row is a few
+# Python objects, so the cap keeps a collected plane near 100 MB.
+LOCAL_MAX_ROWS = 1_000_000
 
 
 def track_persist(df: DataFrame) -> DataFrame:
@@ -113,3 +127,38 @@ def release_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+def collect_bounded(df: DataFrame, max_rows: int) -> Optional[List[Row]]:
+    """Every row of ``df``, or ``None`` when it has more than
+    ``max_rows`` (the caller then stays distributed).
+
+    One ``limit(max_rows + 1).collect()``: a plane that fits arrives
+    whole, and one that does not is cut off after ``max_rows + 1``
+    rows, never collected in full.
+    """
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: Union[StructType, str]
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s
+    field order), shipped as Arrow batches.
+
+    ``createDataFrame`` over a Python list runs a Spark job through
+    Python workers to convert the rows; over a pandas frame it builds
+    the Arrow batches on the driver and runs none. Object-dtype
+    columns keep ints exact and ``None`` as null, where pandas would
+    widen an int column with a null to float64.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    pdf = pd.DataFrame(
+        {
+            name: pd.Series([r[i] for r in rows], dtype=object)
+            for i, name in enumerate(schema.names)
+        }
+    )
+    return spark.createDataFrame(pdf, schema)

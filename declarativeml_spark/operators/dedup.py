@@ -19,8 +19,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
+from declarativeml_spark.operators import caching
 from declarativeml_spark.operators.caching import (
+    collect_bounded,
+    local_frame,
     release_checkpoint,
     track_persist,
 )
@@ -1023,34 +1027,48 @@ def connected_components(
     b_col: str = "id_b",
     max_rounds: int = 20,
 ) -> DataFrame:
-    """Near-dup clusters: connected components over a pair graph by
-    iterative min-label propagation (each node repeatedly takes the
-    smallest label among itself and its neighbours).
+    """Near-dup clusters: connected components over a pair graph.
 
     The last mile of every dedup pipeline: pair emitters (minhash,
     simhash, embedding cosine) produce EDGES, but retention decisions
     need one canonical doc per CLUSTER — A~B and B~C must collapse to
     one group even though (A, C) was never emitted as a pair.
 
-    Scale: the classic Pregel-style loop in DataFrame ops. Labels are
-    (id, long) pairs — the only shuffled state; vectors/text never
-    enter. Rounds are bounded by component diameter, which for
-    near-dup clusters is tiny (dup sets are near-cliques, not
-    chains); converged typically in 2-4 rounds, detected by counting
-    rows whose label changed (type-agnostic: works for string/UUID ids
-    too, where a label-sum fixpoint would silently degrade). Each
-    round persists its labels and unpersists the previous round's.
-    Raises if the fixpoint is not reached within ``max_rounds`` —
-    returning split clusters silently would corrupt retention
-    decisions downstream.
+    Driver-local: a pair list of at most ``LOCAL_MAX_ROWS`` rows (the
+    near-dup pairs of a corpus, a few hundred at sf0.1) is pulled with
+    ``collect_bounded`` and joined by union-find whose roots are each
+    component's minimum id — exactly the label the propagation loop
+    converges to, so both paths return the same rows (a NULL id stays
+    an isolated node labelled NULL on both).
+
+    Above the cap, iterative min-label propagation runs in DataFrame
+    ops: each node repeatedly takes the smallest label among itself
+    and its neighbours. Labels are (id, long) pairs — the only
+    shuffled state. Rounds are bounded by component diameter, which
+    for near-dup clusters is tiny (dup sets are near-cliques, not
+    chains); convergence is detected by counting rows whose label
+    changed (type-agnostic: works for string/UUID ids too). Each round
+    checkpoints its labels and releases the previous round's. Raises
+    if the fixpoint is not reached within ``max_rounds`` — returning
+    split clusters silently would corrupt retention decisions
+    downstream; ``max_rounds`` bounds only this loop.
 
     Returns (doc_id, cluster_id) for every node appearing in a pair;
     cluster_id is the component's minimum doc_id. Deterministic —
     oracle-checkable against a recursive-CTE transitive closure.
     """
+    p = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+    rows = collect_bounded(p, caching.LOCAL_MAX_ROWS)
+    if rows is not None:
+        id_type = p.select("a").union(p.select("b")).schema[0].dataType
+        schema = StructType(
+            [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
+        )
+        return local_frame(pairs.sparkSession, _min_id_components(rows), schema)
+
     # persist the pair list first: the forward/reverse union branches
     # would otherwise each execute the (expensive) pair-emitter plan
-    p = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).transform(track_persist)
+    p = p.transform(track_persist)
     e_fwd = p.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     e_rev = p.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     edges = e_fwd.union(e_rev).distinct().transform(track_persist)
@@ -1120,6 +1138,32 @@ def connected_components(
             f" {max_rounds} — raise max_rounds"
         )
     return lbl.select(F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+
+
+def _min_id_components(pairs: list) -> list:
+    """(node, component minimum) for every node of ``pairs``, by
+    union-find that always hangs the larger root under the smaller.
+    A NULL id joins nothing (the propagation loop's NULL never matches
+    a join key) and keeps the label NULL."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(v, find(v)) for v in parent]
 
 
 # (applicationId, cache_key, params) → (corpus, cents). The IVF

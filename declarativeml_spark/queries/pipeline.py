@@ -502,11 +502,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The retention step of a 100 TB dedup pipeline: pair emitters give
     edges; keep/drop decisions need one canonical doc per component.
-    Spark side is the Pregel-style min-label-propagation loop in
-    operators/dedup.py::connected_components (labels-only shuffles,
-    label-sum fixpoint detection); the oracle is a recursive-CTE
-    transitive closure over the identical pair CTEs — an iterative
-    DataFrame algorithm still hash-checked against DuckDB.
+    Spark side is operators/dedup.py::connected_components: the
+    pair list (a few hundred rows here) is joined on the driver by
+    min-id union-find, with min-label propagation in DataFrame ops
+    above ``LOCAL_MAX_ROWS`` pairs; the oracle is a recursive-CTE
+    transitive closure over the identical pair CTEs.
     """
     from declarativeml_spark.operators.dedup import connected_components
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from declarativeml_spark.operators import textops as T
-from declarativeml_spark.queries.registry import query, sround
+from declarativeml_spark.queries.registry import DEC38, query, spark_decimal, sround
 from declarativeml_spark.sources.catalog import load_table
 
 from declarativeml_spark.operators.corpus import (
@@ -481,23 +481,25 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the nation-level trade-flow graph (supplier
     nation → customer nation, edge weight = revenue): the
     link-authority signal pretraining pipelines use for source
-    quality weighting, expressed as an iterative DataFrame algorithm
-    with bit-exact cross-engine parity.
+    quality weighting.
 
-    Determinism: contribution sums go through DECIMAL(38,12) (exact,
-    order-independent — shuffle order cannot change the result), the
-    iteration count is fixed, and dangling mass leaks identically in
-    both engines, so three unrolled iterations hash-match a DuckDB
-    CTE chain.
+    Driver-local: Spark computes the edge aggregate; the iterations
+    run in Python on the collected edges. The node set is the nation
+    dimension (25 nodes, at most 625 edges at every scale factor), so
+    there is no size guard and no distributed fallback; a distributed
+    loop paid several Spark jobs per iteration on a 25-row frontier.
 
-    Scale: each iteration is one equi-join of edges with the rank
-    vector on src plus one groupBy(dst) — both shuffle slim
-    (node, double) rows only; the edge list itself never moves after
-    the initial normalization. At 1e9+ nodes the rank vector
-    co-partitions with the edge src key (bucketing), making the join
-    shuffle-free; dedup_clusters' persist-per-round discipline
-    applies to the rank frontier.
+    Exactness: the loop repeats each step of the DuckDB oracle's CTE
+    chain with Spark's own arithmetic — a double cast to DECIMAL(38,6)
+    or (38,12) is ``spark_decimal`` (``Double.toString`` digits,
+    HALF_UP), decimal sums are exact, the decimal → double cast rounds
+    correctly, and every double operation runs in the order the Spark
+    expressions did. The final ``stable_round`` is the shared Spark
+    expression over the driver-built frame. Dangling mass leaks
+    identically in both engines.
     """
+    from declarativeml_spark.operators.caching import local_frame
+
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -522,68 +524,29 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("src", "dst")
         .agg(F.sum(rev).cast("double").alias("w"))
+        .collect()
     )
-    from declarativeml_spark.operators.caching import track_persist
-
-    edges = edges.transform(track_persist)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(track_persist)
-    )
-    n_nodes = float(nodes.count())
-    outw = edges.groupBy("src").agg(
-        F.sum(F.col("w").cast("decimal(38,6)")).cast("double").alias("total")
-    )
-    enorm = (
-        edges.join(outw, "src")
-        .select("src", "dst", (F.col("w") / F.col("total")).alias("wn"))
-        .transform(track_persist)
-    )
-    from declarativeml_spark.operators.caching import release_checkpoint
-
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    prev = None
-    for _it in range(_PR_ITERS):
-        contrib = (
-            enorm.join(ranks, enorm.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("wn")).cast("decimal(38,12)").alias("c"),
+    nodes = sorted({e.src for e in edges} | {e.dst for e in edges})
+    n_nodes = float(len(nodes))
+    total: dict = {}
+    for e in edges:
+        total[e.src] = DEC38.add(total.get(e.src, 0), spark_decimal(e.w, 6))
+    enorm = [(e.src, e.dst, e.w / float(total[e.src])) for e in edges]
+    ranks = dict.fromkeys(nodes, 1.0 / n_nodes)
+    base = (1.0 - _PR_D) / n_nodes
+    for _ in range(_PR_ITERS):
+        contrib: dict = {}
+        for src, dst, wn in enorm:
+            contrib[dst] = DEC38.add(
+                contrib.get(dst, 0), spark_decimal(ranks[src] * wn, 12)
             )
-            .groupBy("node")
-            .agg(F.sum("c").cast("double").alias("contrib"))
-        )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit((1.0 - _PR_D) / n_nodes)
-                + _PR_D * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        # localCheckpoint (eager) both materializes the iteration and
-        # truncates the plan to a leaf RDD scan — persist alone keeps
-        # the full unrolled lineage in the logical plan (the r3 audit
-        # measured 308 Exchange nodes in the final tree), which
-        # Catalyst re-analyzes on every downstream use. Values are
-        # unchanged; the rank frontier is (nation, double)-sized.
-        # unpersist() can't free checkpoint blocks, so release each
-        # superseded generation explicitly once the next one exists.
-        # r12: checkpoint every SECOND iteration instead of every one
-        # (guide §1.2 — each eager checkpoint is a full job-launch
-        # floor on a 25-row frontier; a fixed-iteration loop computes
-        # identical values wherever the plan is cut), and never on the
-        # final iteration — the caller's action materializes that one.
-        # At most one unrolled iteration (join+agg over the PERSISTED
-        # enorm/nodes planes) rides each job, so plan growth stays
-        # bounded at any _PR_ITERS.
-        if (_it + 1) % 2 == 0 and (_it + 1) < _PR_ITERS:
-            ranks = ranks.localCheckpoint(eager=True)
-            if prev is not None:
-                release_checkpoint(prev)
-            prev = ranks
-    return ranks.select(
+        ranks = {
+            v: base + _PR_D * (float(contrib[v]) if v in contrib else 0.0)
+            for v in nodes
+        }
+    return local_frame(
+        spark, list(ranks.items()), "node string, rank double"
+    ).select(
         F.col("node").alias("nation"),
         F.expr(T.stable_round("rank", 10)).alias("pagerank"),
     )

@@ -33,6 +33,9 @@ arithmetic with identical SQL text in both engines.
 
 from __future__ import annotations
 
+import math
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1455,26 +1458,31 @@ def score_agreement_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection signals (high ρ → one is redundant; ρ ≈ 0 → they
     measure different things and can be multiplied).
 
-    Both rank assignments use ordered.py's two-phase frozen-range
-    rank (never a partition-less window); ties are impossible (both
-    orderings end on doc_id), so the classic ``1 − 6Σd²/(n(n²−1))``
-    closed form is exact — integer rank differences, one DECIMAL-free
-    integer sum, one final IEEE expression shared across engines.
+    ONE scorer pass: a single tokenize computes the margin fold per
+    document and feeds the DSIR bucket explode; the margin rides the
+    exploded rows and comes back out of the per-document aggregate via
+    first(). The expression text is shared verbatim with the operators
+    (quality_weight_of / _BKT / _DSIR_LL), so the forms cannot drift.
 
-    r11 FUSED scorer pass (guide §1.2/§2.4): the original form called
-    quality_margin + dsir_weights separately — TWO full corpus scans,
-    TWO tokenize passes (the dominant per-row CPU), and a doc-plane
-    shuffle join to land (margin, logw) side by side. Here ONE
-    tokenize pass computes the margin fold per document and feeds the
-    DSIR bucket explode; the margin (8 bytes) rides the exploded rows
-    and comes back out of the per-document aggregate via first() —
-    identical values (expression text shared verbatim with the
-    operators: quality_weight_of / _BKT / _DSIR_LL, so the forms
-    cannot drift; the oracle re-proves equality), one corpus pass,
-    zero joins. At 100 TB this halves the scan+tokenize work and
-    removes a full doc-plane shuffle.
+    Driver-local ranks: the ``(doc_id, margin, logw)`` plane, one row
+    per document, is pulled with ``collect_bounded`` up to
+    ``LOCAL_MAX_ROWS`` rows. Both orderings are ranked in Python as
+    ROW_NUMBER over ``(metric, doc_id)`` in Spark's double order
+    (−0.0 equals 0.0, NaN sorts last, NULL first) — exactly the
+    orderings the oracle's ranks CTE declares — and Σd² is an exact
+    Python int. Above the cap, ``global_rank_multi`` ranks both
+    orderings from one tagged-union range exchange and Σd² is an
+    exact DECIMAL sum. Either way the final ρ and its ``sround`` are
+    one Spark expression, shared in form with the oracle. Ties are
+    impossible (both orderings end on doc_id), so the closed form
+    ``1 − 6Σd²/(n(n²−1))`` is exact.
     """
-    from declarativeml_spark.operators.caching import track_persist
+    from declarativeml_spark.operators.caching import (
+        LOCAL_MAX_ROWS,
+        collect_bounded,
+        local_frame,
+        track_persist,
+    )
     from declarativeml_spark.operators.ordered import global_rank_multi
     from declarativeml_spark.operators.textops import (
         QUALITY_BUCKETS,
@@ -1517,11 +1525,8 @@ def score_agreement_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rtot = sum(r["rc"] for r in stat_rows)
     ttot = sum(r["tc"] for r in stat_rows)
-    stats = spark.createDataFrame(
-        [(r["bkt"], r["rc"], r["tc"]) for r in stat_rows],
-        "bkt int, rc long, tc long",
-    )
-    tots = spark.createDataFrame([(rtot, ttot)], "rtot long, ttot long")
+    stats = local_frame(spark, stat_rows, "bkt int, rc long, tc long")
+    tots = local_frame(spark, [(rtot, ttot)], "rtot long, ttot long")
     j = (
         bk.join(F.broadcast(stats), "bkt")
         .crossJoin(F.broadcast(tots))
@@ -1533,36 +1538,57 @@ def score_agreement_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("logw"),
         )
     )
-    # Rank planes are one row per document; 16 range partitions keep
-    # the two-phase rank's task count proportional to this small
-    # plane locally (values are partitioning-independent; a 100 TB
-    # caller passes a real partition count).
-    # r12 (guide §1.2/§2.4): BOTH ranks from one tagged-union pass —
-    # the former two chained global_cumsum calls each paid a boundary
-    # sampler, a range exchange and a totals collect over the same
-    # doc plane; global_rank_multi folds that to one of each and
-    # pivots the ranks back without a rank-plane self-join. Rank
-    # values are identical: ROW_NUMBER over (margin, doc_id) and
-    # (logw, doc_id), exactly the orderings the oracle's ranks CTE
-    # declares.
-    both = global_rank_multi(
-        j,
-        [("margin", "asc", "rq"), ("logw", "asc", "rw")],
-        "doc_id",
-        num_partitions=16,
+    plane = collect_bounded(j, LOCAL_MAX_ROWS)
+    if plane is not None:
+        rq = _row_numbers(plane, "margin")
+        rw = _row_numbers(plane, "logw")
+        # SUM over no documents is NULL, as on the fallback
+        ssd = Decimal(sum((rq[d] - rw[d]) ** 2 for d in rq)) if plane else None
+        sums = local_frame(
+            spark, [(len(plane), ssd)], "n long, ssd decimal(38,0)"
+        ).select("n", F.col("ssd").cast("double").alias("ssd"))
+    else:
+        # Rank planes are one row per document; 16 range partitions
+        # keep the two-phase rank's task count proportional to this
+        # plane (values are partitioning-independent).
+        both = global_rank_multi(
+            j,
+            [("margin", "asc", "rq"), ("logw", "asc", "rw")],
+            "doc_id",
+            num_partitions=16,
+        )
+        # DECIMAL accumulator: sum(d^2) grows ~ n^3/6 and overflows
+        # int64 near n = 3M docs (ANSI abort); DuckDB's HUGEINT sum
+        # never does — the decimal sum is exact like both and
+        # scale-safe
+        dd = (F.col("rq") - F.col("rw")).cast("decimal(38,0)") * (
+            F.col("rq") - F.col("rw")
+        )
+        sums = both.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(dd).cast("double").alias("ssd"),
+        )
+    n = F.col("n").cast("double")
+    rho = 1.0 - 6.0 * F.col("ssd") / (n * (n * F.col("n") - 1.0))
+    return sums.select(
+        F.col("n").alias("n_docs"), sround(rho, 8).alias("spearman_rho")
     )
-    # DECIMAL accumulator: sum(d^2) grows ~ n^3/6 and overflows int64
-    # near n = 3M docs (ANSI abort); DuckDB's HUGEINT sum never does —
-    # the decimal sum is exact like both and scale-safe
-    dd = (F.col("rq") - F.col("rw")).cast("decimal(38,0)") * (
-        F.col("rq") - F.col("rw")
-    )
-    n = F.count(F.lit(1)).cast("double")
-    rho = 1.0 - 6.0 * F.sum(dd).cast("double") / (n * (n * F.count(F.lit(1)) - 1.0))
-    return both.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        sround(rho, 8).alias("spearman_rho"),
-    )
+
+
+def _row_numbers(plane: list, metric: str) -> dict:
+    """``doc_id`` → ROW_NUMBER() OVER (ORDER BY metric, doc_id), in
+    Spark's ascending double order: NULL first, NaN last, and −0.0
+    equal to 0.0 (as Python compares them)."""
+
+    def key(r):
+        v = r[metric]
+        if v is None:
+            return (0, 0.0, r["doc_id"])
+        if math.isnan(v):
+            return (2, 0.0, r["doc_id"])
+        return (1, v, r["doc_id"])
+
+    return {r["doc_id"]: i for i, r in enumerate(sorted(plane, key=key), 1)}
 
 
 # ---------------------------------------------------------------------------
@@ -2346,8 +2372,6 @@ def lineitem_pruning_effectiveness(spark: SparkSession, sf_dir: str) -> DataFram
     # same integer math as the oracle's SQL, from the collected
     # bounds: w = FLOOR((pk_mx - pk_mn + 8.0) / 8.0) is one IEEE
     # double division, identical driver-side
-    import math
-
     pk_mn, pk_mx = int(mmr["pk_mn"]), int(mmr["pk_mx"])
     w = int(math.floor((pk_mx - pk_mn + 8.0) / 8.0))
     pk_preds = spark.createDataFrame(

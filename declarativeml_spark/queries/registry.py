@@ -18,6 +18,7 @@ identical rows in both engines.
 from __future__ import annotations
 
 from collections.abc import Callable
+from decimal import ROUND_HALF_UP, Context, Decimal
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -43,6 +44,22 @@ def dsum(col: Column | str, alias: str) -> Column:
     """Order-independent sum of a double expression via exact decimal."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast("decimal(38,6)")).cast("double").alias(alias)
+
+
+# DECIMAL(38, s) arithmetic: Spark's widest decimal precision
+DEC38 = Context(prec=38, rounding=ROUND_HALF_UP)
+
+
+def spark_decimal(x: float, scale: int) -> Decimal:
+    """``CAST(x AS DECIMAL(38, scale))`` as Spark computes it, on the
+    driver: the decimal digits of ``Double.toString(x)``, rounded
+    HALF_UP at ``scale``. ``repr`` gives the shortest round-trip
+    digits; a JVM before 19 may print a longer string for a rare
+    double, which changes the result only if that string crosses a
+    rounding boundary. Sum the results under ``DEC38`` and ``float()``
+    the sum to mirror a DECIMAL sum cast back to double (both round
+    correctly)."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), context=DEC38)
 
 
 def davg(col: Column | str, alias: str) -> Column:

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults chosen for the test harness (local[32], 128 GiB)
-but every setting here is the one we'd also want on a 1000-executor
-cluster: AQE on (runtime re-plan, skew-join splitting, partition
+Local mode uses every core the process may run on unless
+``SPARK_GRAFT_CPUS`` or the caller names a count; every other setting
+here is the one we'd also want on a 1000-executor cluster: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), Arrow for the Python boundary, UTC so results are
 comparable to a UTC-naive oracle.
 """
@@ -14,12 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "declarativeml_spark", cpus: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults."""
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

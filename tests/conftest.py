@@ -75,3 +75,15 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def smoke_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(params=["local", "fallback"])
+def plane_path(request, monkeypatch):
+    """Run a size-aware operator on its driver-local path, then on its
+    distributed fallback. The fallback cap is -1, not 0: an empty plane
+    fits a cap of 0 and would still run locally."""
+    if request.param == "fallback":
+        from declarativeml_spark.operators import caching
+
+        monkeypatch.setattr(caching, "LOCAL_MAX_ROWS", -1)
+    return request.param

@@ -5,7 +5,11 @@ inert on frames it does not apply to."""
 
 import pytest
 
-from declarativeml_spark.operators.caching import release_checkpoint
+from declarativeml_spark.operators.caching import (
+    collect_bounded,
+    local_frame,
+    release_checkpoint,
+)
 
 
 def _n_stored_rdds(spark) -> int:
@@ -40,11 +44,12 @@ def test_release_checkpoint_inert_on_plain_frames(spark):
     assert _n_stored_rdds(spark) == base
 
 
-def test_iterative_loops_do_not_accumulate_generations(spark):
-    """connected_components runs multiple localCheckpoint rounds; at
-    most ONE label generation (the returned frame) may remain stored
-    afterwards — without per-round release every round's blocks
-    would survive until driver GC."""
+def test_iterative_loops_do_not_accumulate_generations(spark, plane_path):
+    """connected_components' fallback runs multiple localCheckpoint
+    rounds; at most ONE label generation (the returned frame) may
+    remain stored afterwards — without per-round release every
+    round's blocks would survive until driver GC. The driver-local
+    path stores nothing."""
     from declarativeml_spark.operators.dedup import connected_components
 
     base = _n_stored_rdds(spark)
@@ -84,3 +89,27 @@ def test_lsh_keyed_index_persist_base_flag(spark, smoke_dir):
         assert len(scope) == 1
         assert scope[0].storageLevel != StorageLevel.NONE
     caching.release_all(scope)
+
+
+def test_collect_bounded_boundary(spark):
+    df = spark.range(5)
+    assert sorted(r.id for r in collect_bounded(df, 5)) == list(range(5))
+    assert collect_bounded(df, 4) is None
+    assert collect_bounded(df.filter("id < 0"), 5) == []
+
+
+def test_local_frame_runs_no_job_and_keeps_values(spark):
+    """Big ints stay exact and NULLs stay NULL (a pandas int column
+    with a None would widen to float64), and building the frame runs
+    no Spark job."""
+    from decimal import Decimal
+
+    sc = spark.sparkContext
+    rows = [(2**62 + 1, None, "a", Decimal("12.5")), (None, -0.0, None, None)]
+    sc.setJobGroup("local_frame_test", "local_frame_test")
+    try:
+        df = local_frame(spark, rows, "i long, d double, s string, m decimal(38,1)")
+        assert sc.statusTracker().getJobIdsForGroup("local_frame_test") == []
+    finally:
+        sc.setJobGroup("", "")
+    assert [tuple(r) for r in df.collect()] == rows

@@ -168,10 +168,11 @@ def test_search_rejects_unknown_options(engine):
         )
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, plane_path):
     """A chain a-b, b-c, c-d must collapse to ONE cluster labelled by
-    the minimum id — requires multiple propagation rounds (diameter
-    3), plus a separate 2-cluster and a pair ordered high-low."""
+    the minimum id — multiple propagation rounds on the fallback
+    (diameter 3) — plus a separate 2-cluster and a pair ordered
+    high-low."""
     from declarativeml_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -189,11 +190,31 @@ def test_connected_components_chain(spark):
     }
 
 
-def test_connected_components_empty(spark):
+def test_connected_components_empty(spark, plane_path):
     from declarativeml_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame([], "id_a LONG, id_b LONG")
     assert connected_components(pairs).count() == 0
+
+
+def test_connected_components_string_ids_and_nulls(spark, plane_path):
+    """String ids order by code point on both paths, and a NULL id
+    joins nothing: it stays its own node, labelled NULL."""
+    from declarativeml_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("é", "z"), ("x", None)],
+        "id_a STRING, id_b STRING",
+    )
+    got = {
+        (r.doc_id, r.cluster_id)
+        for r in connected_components(pairs).collect()
+    }
+    assert got == {
+        ("a", "a"), ("b", "a"), ("c", "a"),
+        ("z", "z"), ("é", "z"),
+        ("x", "x"), (None, None),
+    }
 
 
 def test_dedup_clusters_matches_query(engine, spark, smoke_dir):
@@ -202,9 +223,14 @@ def test_dedup_clusters_matches_query(engine, spark, smoke_dir):
     assert _rows(dsl) == _rows(ref)
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
+    """Only the distributed fallback has rounds, so the pair list is
+    kept off the driver."""
     import pytest as _pytest
+    from declarativeml_spark.operators import caching
     from declarativeml_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(caching, "LOCAL_MAX_ROWS", -1)
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a LONG, id_b LONG"
